@@ -70,6 +70,15 @@ def next_doc_id(manifest: dict) -> int:
                             manifest["collection_stats"]["n_docs"]))
 
 
+def _link_or_copy(src: str, dst: str) -> None:
+    """Hard-link ``src`` to ``dst``, or copy where linking fails."""
+    os.makedirs(os.path.dirname(dst), exist_ok=True)
+    try:
+        os.link(src, dst)
+    except OSError:
+        shutil.copy2(src, dst)
+
+
 def _write_manifest(index_dir: str, manifest: dict) -> None:
     """Atomic snapshot commit: write-new + rename."""
     tmp = os.path.join(index_dir, "manifest.json.tmp")
@@ -311,6 +320,11 @@ def _make_repack(block_size: int, exact_norms: bool, want_positions: bool):
             return
         freqs = np.concatenate(freqs_l)
         norms = np.concatenate(norms_l)
+        if (np.diff(dids) < 0).any():
+            # a segment merged from non-adjacent ones interleaves ids
+            order = np.argsort(dids, kind="stable")
+            dids, freqs, norms = dids[order], freqs[order], norms[order]
+            possegs = [possegs[i] for i in order] if want_positions else []
         for seq, st in enumerate(range(0, len(dids), block_size)):
             d = dids[st:st + block_size]
             f = freqs[st:st + block_size]
@@ -819,16 +833,18 @@ def merge_segments(spark: SparkSession, index_dir: str,
                 if name == "docs" and docs_linked:
                     # no-delete merge: the chosen segments' doc files
                     # are byte-identical under the merged segment —
-                    # link them under the segM name (no Spark rewrite)
+                    # link them under the segM name (no Spark rewrite);
+                    # the source segment in the name keeps equal
+                    # basenames of two segments apart
                     for rel in rels:
-                        fn = os.path.basename(rel)
-                        dst = os.path.join(dst_root, f"segM{gen}-{fn}")
-                        os.link(os.path.join(tables[name], rel), dst)
+                        fn = _SEG_FILE_RE.sub("", os.path.basename(rel))
+                        dst = os.path.join(dst_root, os.path.dirname(rel),
+                                           f"segM{gen}-{seg}-{fn}")
+                        _link_or_copy(os.path.join(tables[name], rel), dst)
                 continue
             for rel in rels:
-                dst = os.path.join(dst_root, rel)
-                os.makedirs(os.path.dirname(dst), exist_ok=True)
-                os.link(os.path.join(tables[name], rel), dst)
+                _link_or_copy(os.path.join(tables[name], rel),
+                              os.path.join(dst_root, rel))
         src_staged = os.path.join(staging, name)
         if os.path.isdir(src_staged):
             for root, _dirs, files in os.walk(src_staged):

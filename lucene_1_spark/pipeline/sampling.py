@@ -24,7 +24,7 @@ Both are pure JVM column expressions — no Python in the hot path.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window as W, functions as F
+from pyspark.sql import DataFrame, Window as W, functions as F, types as T
 
 _MOD = 1_000_000
 
@@ -86,11 +86,14 @@ def pack_sequences(docs: DataFrame, text_col: str = "text",
     The only unpartitioned window runs over the per-group sums — a
     relation ~4096x smaller than the rows (assuming reasonably dense
     ids; engine doc_ids are dense by construction).  Results are
-    bit-identical to the naive global window.
+    bit-identical to the naive global window.  A non-numeric id column
+    has no id groups and takes that single global window.
     """
     out = docs.withColumn("n_tokens", token_count_col(text_col))
-    if shard_col is not None:
-        w = W.partitionBy(shard_col).orderBy(F.asc(id_col)) \
+    if shard_col is not None or not isinstance(
+            docs.select(id_col).schema[0].dataType, T.NumericType):
+        spec = W.partitionBy(shard_col) if shard_col is not None else W
+        w = spec.orderBy(F.asc(id_col)) \
             .rowsBetween(W.unboundedPreceding, W.currentRow)
         out = out.withColumn(
             "tok_start",

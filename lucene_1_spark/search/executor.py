@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame, functions as F, types as T
 
 from lucene_1_spark.functions import bm25, codecs
 from lucene_1_spark.index.builder import FIELD_SEP
+from lucene_1_spark.index.maintenance import next_doc_id
 from lucene_1_spark.index.reader import IndexReader
 from lucene_1_spark.search.query import (
     MAX_CLAUSE_COUNT, BooleanQuery, Clause, CommonTermsQuery,
@@ -85,8 +86,9 @@ POSITIONS_SCHEMA = T.StructType([
     T.StructField("positions", T.ArrayType(T.IntegerType())),
 ])
 
-# positions decode carrying the term — used by the one-pass phrase
-# pivot (all slots' positions decoded in one kernel, grouped per doc)
+# positions decode carrying the term — used by the interval sources'
+# one-pass pivot (all lists' positions decoded in one kernel, grouped
+# per doc)
 POSITIONS_TERM_SCHEMA = T.StructType([
     T.StructField("term", T.StringType()),
     T.StructField("doc_id", T.LongType()),
@@ -168,6 +170,213 @@ def _merge_ranges(ranges: list[tuple[int, int]],
                 out.append(iv)
         merged = out
     return merged
+
+
+def _overlap_cond(ranges: list[tuple[int, int]],
+                  max_intervals: int) -> F.Column:
+    """Block predicate: [first_doc, last_doc] overlaps one of the
+    (merged, at most ``max_intervals``) sorted doc ranges."""
+    cond = None
+    for lo, hi in _merge_ranges(ranges, max_intervals):
+        c = (F.col("last_doc") >= lo) & (F.col("first_doc") <= hi)
+        cond = c if cond is None else cond | c
+    return cond
+
+
+def _collect(scored: DataFrame, k: int | None,
+             after: tuple[float, int] | None = None) -> DataFrame:
+    """The shared collector tail over (doc_id, score) hits: drop hits
+    at or before the ``after`` cursor (searchAfter: a lower score, or
+    an equal score and a higher doc_id), then return every hit
+    (``k=None``, the exhaustive collector) or the top k by score desc,
+    doc_id asc (TopScoreDocCollector's tie-break)."""
+    if after is not None:
+        s, d = after
+        scored = scored.filter(
+            (F.col("score") < float(s))
+            | ((F.col("score") == float(s)) & (F.col("doc_id") > int(d))))
+    if k is None:
+        return scored
+    return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+
+
+def _block_positions(row, double_mode: bool):
+    """One positions block -> (doc_ids, norms, freqs, absolute positions
+    of every doc, concatenated).  Decode fuses the segmented prefix sum
+    over within-doc position deltas."""
+    n = int(row.num_docs)
+    dids = codecs.decode_doc_ids(bytes(row.doc_gaps), int(row.first_doc), n)
+    freqs = codecs.decode_freqs(bytes(row.freqs), n)
+    norms = np.frombuffer(bytes(row.norms),
+                          dtype="<u4" if double_mode else np.uint8) \
+        .astype(np.int64)
+    deltas = codecs.bitunpack(bytes(row.positions), int(freqs.sum()))
+    ends = np.cumsum(freqs)
+    g = np.cumsum(deltas)
+    doc_base = np.concatenate(
+        [[0], g[ends[:-1] - 1]]) if n > 1 else np.array([0])
+    pos_abs = (g - np.repeat(doc_base, freqs)).astype(np.int32)
+    return dids, norms, freqs, pos_abs
+
+
+def phrase_freq(plists, slop: int, deltas, slot_keys) -> np.ndarray:
+    """Phrase frequency of each row (doc).  ``plists[i][r]`` is the
+    sorted, distinct position list of slot ``i`` in row ``r``;
+    ``deltas[i]`` is slot i's offset from slot 0 and ``slot_keys[i]``
+    its member-term tuple (equal tuples = repeated slots).  The rules
+    are those of :meth:`IndexSearcher._phrase_exec`.  All rows' lists
+    are flattened into one (row, pos)-keyed array, so adjacency is one
+    ``np.isin`` per slot (no per-row Python loop)."""
+    n_slots = len(plists)
+    has_repeats = len(set(slot_keys)) != n_slots
+    # slots with identical member sets need DISTINCT positions
+    # (SloppyPhraseMatcher.java:52-90 repeat handling)
+    repeated = {s for s in slot_keys if slot_keys.count(s) > 1}
+    nrows = len(plists[0])
+    if nrows == 0:
+        return np.zeros(0, dtype=np.float64)
+    M = np.int64(1) << 32  # (row, pos) -> one sortable key
+
+    def keyed(col):
+        lens = np.fromiter((len(x) for x in col), dtype=np.int64,
+                           count=nrows)
+        total = int(lens.sum())
+        flat = (np.concatenate(
+            [np.asarray(x, dtype=np.int64) for x in col])
+            if total else np.zeros(0, dtype=np.int64))
+        rows = np.repeat(np.arange(nrows, dtype=np.int64), lens)
+        return rows * M + flat, rows
+
+    k0, rows0 = keyed(plists[0])
+    if slop == 0:
+        mask = np.ones(len(k0), dtype=bool)
+        for i in range(1, n_slots):
+            ki, _ = keyed(plists[i])
+            mask &= np.isin(k0 + deltas[i], ki)
+        pf = np.bincount(rows0[mask],
+                         minlength=nrows).astype(np.float64)
+    elif n_slots == 2 and not has_repeats:
+        k1s, _ = keyed(plists[1])
+        pf = np.zeros(nrows, dtype=np.float64)
+        for e in range(-slop, slop + 1):
+            m = np.isin(k0 + deltas[1] + e, k1s)
+            if m.any():
+                pf += (np.bincount(rows0[m], minlength=nrows)
+                       / (1.0 + abs(e)))
+    else:
+        # anchor on slot 0 (n>=3, or any n with repeated slots).
+        # Non-repeated slots pick the minimal in-slop
+        # |displacement| independently (one np.isin per offset).
+        # Slots with a REPEATED member set are assigned DISTINCT
+        # positions (Lucene's SloppyPhraseMatcher.java:52-90
+        # forces repeats onto different positions): a
+        # leftmost-feasible greedy in slot order — positions of
+        # the repeat group must be strictly increasing across
+        # its slots, which is WLOG since any crossing assignment
+        # can be uncrossed within the per-slot windows.  The
+        # anchor position is consumed when slot 0 itself
+        # repeats.
+        nk = len(k0)
+        disp_total = np.zeros(nk, dtype=np.float64)
+        valid = np.ones(nk, dtype=bool)
+        offsets_by_abs = sorted(range(-slop, slop + 1), key=abs)
+        keyed_memo: dict[int, np.ndarray] = {}
+        prev: dict[tuple, np.ndarray] = {}
+        if slot_keys[0] in repeated:
+            prev[slot_keys[0]] = k0
+        for i in range(1, n_slots):
+            sk = slot_keys[i]
+            if i not in keyed_memo:
+                keyed_memo[i] = keyed(plists[i])[0]
+            ki = keyed_memo[i]
+            target = k0 + deltas[i]
+            if sk not in repeated:
+                best = np.full(nk, np.inf)
+                for e in offsets_by_abs:
+                    undecided = ~np.isfinite(best)
+                    if not undecided.any():
+                        break
+                    m = undecided & np.isin(target + e, ki)
+                    best[m] = abs(e)
+                slot_ok = np.isfinite(best)
+                valid &= slot_ok
+                disp_total += np.where(slot_ok, best, 0.0)
+                continue
+            p = prev.get(sk)
+            lb = target - slop if p is None \
+                else np.maximum(target - slop, p + 1)
+            if len(ki) == 0:
+                valid[:] = False
+                break
+            idx = np.searchsorted(ki, lb, side="left")
+            idxc = np.minimum(idx, len(ki) - 1)
+            pos = ki[idxc]
+            # pos in [lb, target+slop] stays inside the anchor's
+            # row: keys are row*M + position and slop << M
+            ok = (idx < len(ki)) & (pos <= target + slop)
+            valid &= ok
+            disp_total += np.where(ok, np.abs(pos - target), 0.0)
+            prev[sk] = np.where(ok, pos, target)
+        w = np.where(valid, 1.0 / (1.0 + disp_total), 0.0)
+        pf = np.bincount(rows0, weights=w, minlength=nrows)
+    return pf
+
+
+def _phrase_range_kernel(slots, slop: int, deltas, width: int,
+                         double_mode: bool):
+    """Grouped phrase kernel: the blocks of one doc range ``_r`` (docs
+    ``[_r*width, (_r+1)*width)``) -> (doc_id, norm_val, pf) of the
+    range's matching docs.  Doc ids are decoded first and clipped to
+    the range (a block straddling ranges counts each doc once); slot
+    doc sets (a multi-member slot takes the union of its members) are
+    intersected; freqs, norms and positions are decoded only for
+    blocks holding a candidate."""
+    slot_of = {t: [i for i, s in enumerate(slots) if t in s]
+               for s in slots for t in s}
+    M = np.int64(1) << 32           # (candidate, position) -> one key
+
+    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+        r = int(pdf["_r"].iloc[0])
+        rows = list(pdf.itertuples(index=False))
+        dids = [codecs.decode_doc_ids(bytes(row.doc_gaps), int(row.first_doc),
+                                      int(row.num_docs)) for row in rows]
+        slot_docs: list[list[np.ndarray]] = [[] for _ in slots]
+        for row, d in zip(rows, dids):
+            for i in slot_of[row.term]:
+                slot_docs[i].append(d[d // width == r])
+        cand = None
+        for parts in slot_docs:
+            sd = np.unique(np.concatenate([*parts, np.zeros(0, np.int64)]))
+            cand = sd if cand is None else np.intersect1d(
+                cand, sd, assume_unique=True)
+        if not len(cand):
+            return pd.DataFrame({"doc_id": cand, "norm_val": cand,
+                                 "pf": np.zeros(0)})
+        norm = np.zeros(len(cand), dtype=np.int64)
+        keys: list[list[np.ndarray]] = [[] for _ in slots]
+        for row, d in zip(rows, dids):
+            hit = np.isin(d, cand)
+            if not hit.any():
+                continue
+            _, norms, freqs, pos = _block_positions(row, double_mode)
+            ci = np.searchsorted(cand, d)
+            norm[ci[hit]] = norms[hit]
+            k = (np.repeat(ci, freqs) * M + pos)[np.repeat(hit, freqs)]
+            for i in slot_of[row.term]:
+                keys[i].append(k)
+        plists = []
+        for parts in keys:
+            # sorted distinct positional union per doc (UnionPostingsEnum)
+            k = np.unique(np.concatenate(parts))
+            counts = np.bincount(k // M, minlength=len(cand))
+            plists.append(np.split((k % M).astype(np.int32),
+                                   np.cumsum(counts)[:-1]))
+        pf = phrase_freq(plists, slop, deltas, slots)
+        keep = pf > 0.0
+        return pd.DataFrame({"doc_id": cand[keep], "norm_val": norm[keep],
+                             "pf": pf[keep]})
+
+    return kernel
 
 
 @dataclass
@@ -827,9 +1036,7 @@ class IndexSearcher:
                                          after=after)
             live = matches.join(self.reader.tombstones(), "doc_id",
                                 "left_anti")
-            if k is None:
-                return live
-            return live.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+            return _collect(live, k)
         return self._search_inner(query, k, prune=prune, after=after)
 
     def _search_inner(self, query: Query | str, k: int | None = 10,
@@ -1055,19 +1262,13 @@ class IndexSearcher:
                                 f"{'double' if self.double_mode else 'float'}")
                             return scored
                         if not keep.all():
-                            merged = _merge_ranges(
+                            blocks = blocks.filter(_overlap_cond(
                                 sorted(zip(
                                     meta["first_doc"].to_numpy()[keep]
                                     .astype(int).tolist(),
                                     meta["last_doc"].to_numpy()[keep]
                                     .astype(int).tolist())),
-                                self.MAX_RANGE_INTERVALS)
-                            cond = None
-                            for lo, hi in merged:
-                                c = (F.col("last_doc") >= lo) \
-                                    & (F.col("first_doc") <= hi)
-                                cond = c if cond is None else cond | c
-                            blocks = blocks.filter(cond)
+                                self.MAX_RANGE_INTERVALS))
                     blocks = blocks.withColumn("sv", surv_pred.cast("int"))
                     decoded = blocks.select(*DECODE_COLS, "sv").mapInPandas(
                         self._decode_kernel(weights, want_scores=True,
@@ -1087,7 +1288,7 @@ class IndexSearcher:
             scored = (per_doc.filter(F.col("_sv") == 1)
                       .select("doc_id", F.col("score_d").cast(score_type0)
                               .alias("score")))
-            return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+            return _collect(scored, k)
 
         # union the complex sub-plan pseudo-term rows into the same
         # (term, doc_id, score) relation the aggregation consumes
@@ -1105,15 +1306,7 @@ class IndexSearcher:
                 and decoded is not None):
             scored = decoded.select(
                 "doc_id", F.col("score").cast(score_type0).alias("score"))
-            if after is not None:
-                s, d = after
-                scored = scored.filter(
-                    (F.col("score") < float(s))
-                    | ((F.col("score") == float(s))
-                       & (F.col("doc_id") > int(d))))
-            if k is None:
-                return scored
-            return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+            return _collect(scored, k, after)
 
         required_terms = sorted({t.term for t in must}
                                 | {t.term for t in filters}) \
@@ -1153,14 +1346,7 @@ class IndexSearcher:
         score_type = "double" if self.double_mode else "float"
         scored = per_doc.select(
             "doc_id", F.col("score_d").cast(score_type).alias("score"))
-        if after is not None:
-            s, d = after
-            scored = scored.filter(
-                (F.col("score") < float(s))
-                | ((F.col("score") == float(s)) & (F.col("doc_id") > int(d))))
-        if k is None:
-            return scored
-        return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+        return _collect(scored, k, after)
 
     DRIVER_RANGE_CAP = 4096     # skip pruning if the driver term has more blocks
     MAX_RANGE_INTERVALS = 64    # cap the OR-predicate size
@@ -1178,15 +1364,19 @@ class IndexSearcher:
         if cap is None:
             cap = self.DRIVER_META_CAP
         try:
-            n_seg = max(int(self.reader.manifest.get("n_segments", 1)), 1)
-            stats = self.reader.term_statistics(list(terms))
-            est = sum(stats.get(t, (0, 0))[0] // codecs.BLOCK_SIZE
-                      + n_seg for t in terms)
-            if est > cap:
+            if self._estimate_blocks(terms) > cap:
                 return None
             return self.reader.block_meta_arrow(sorted(terms))
         except Exception:
             return None
+
+    def _estimate_blocks(self, terms) -> int:
+        """Posting blocks of ``terms`` estimated from the memoized term
+        statistics, plus one partial tail block per segment per term."""
+        n_seg = max(int(self.reader.manifest.get("n_segments", 1)), 1)
+        stats = self.reader.term_statistics(list(terms))
+        return sum(stats.get(t, (0, 0))[0] // codecs.BLOCK_SIZE + n_seg
+                   for t in terms)
 
     def _ub_np(self, meta, weights: dict[str, float]) -> np.ndarray:
         """The _ub_col formula over driver-side metadata rows — same
@@ -1227,12 +1417,8 @@ class IndexSearcher:
                 return blocks
             ranges = sorted((int(r["first_doc"]), int(r["last_doc"]))
                             for r in rows)
-        merged = _merge_ranges(ranges, self.MAX_RANGE_INTERVALS)
-        cond = None
-        for lo, hi in merged:
-            c = (F.col("last_doc") >= lo) & (F.col("first_doc") <= hi)
-            cond = c if cond is None else cond | c
-        return blocks.filter((F.col("term") == driver_term) | cond)
+        return blocks.filter((F.col("term") == driver_term)
+                             | _overlap_cond(ranges, self.MAX_RANGE_INTERVALS))
 
     def _other_max_ubs(self, blocks: DataFrame, weights: dict[str, float],
                        meta=None) -> dict[str, float]:
@@ -1311,39 +1497,22 @@ class IndexSearcher:
 
     # ------------------------------------------------------------------
     def _decode_positions_kernel(self, with_term: bool = False):
-        """Blocks of one term -> (doc_id, norm_val, positions).  Decode
-        fuses the segmented prefix-sum over within-doc position deltas.
-        ``with_term=True`` additionally carries the block's term so a
-        multi-term decode can be pivoted per slot downstream."""
+        """Blocks -> (doc_id, norm_val, positions) per doc (see
+        :func:`_block_positions`).  ``with_term=True`` additionally
+        carries the block's term so a multi-term decode can be pivoted
+        per slot downstream."""
         double_mode = self.double_mode
 
         def decode(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             for pdf in it:
                 outs = []
                 for row in pdf.itertuples(index=False):
-                    n = int(row.num_docs)
-                    dids = codecs.decode_doc_ids(bytes(row.doc_gaps),
-                                                 int(row.first_doc), n)
-                    freqs = codecs.decode_freqs(bytes(row.freqs), n)
-                    if double_mode:
-                        norms = np.frombuffer(bytes(row.norms), dtype="<u4") \
-                            .astype(np.int64)
-                    else:
-                        norms = np.frombuffer(bytes(row.norms), dtype=np.uint8) \
-                            .astype(np.int64)
-                    total = int(freqs.sum())
-                    deltas = codecs.bitunpack(bytes(row.positions), total)
-                    ends = np.cumsum(freqs)
-                    g = np.cumsum(deltas)
-                    doc_base = np.concatenate(
-                        [[0], g[ends[:-1] - 1]]) if n > 1 else np.array([0])
-                    pos_abs = (g - np.repeat(doc_base, freqs)).astype(np.int32)
-                    out = {
-                        "doc_id": dids, "norm_val": norms,
-                        "positions": np.split(pos_abs, ends[:-1]),
-                    }
+                    dids, norms, freqs, pos = _block_positions(row,
+                                                               double_mode)
+                    out = {"doc_id": dids, "norm_val": norms,
+                           "positions": np.split(pos, np.cumsum(freqs)[:-1])}
                     if with_term:
-                        out = {"term": np.repeat(row.term, n), **out}
+                        out = {"term": np.repeat(row.term, len(dids)), **out}
                     outs.append(pd.DataFrame(out))
                 yield pd.concat(outs) if outs else pd.DataFrame(
                     ({"term": []} if with_term else {})
@@ -1380,19 +1549,19 @@ class IndexSearcher:
                      after: tuple[float, int] | None) -> DataFrame:
         """Positional phrase kernel over term-union SLOTS, scale-shaped
         like the reference's positional leapfrog
-        (``search/ExactPhraseMatcher.java:109-153``):
-
-        1. **candidate intersection first** — a cheap docs-only decode
-           (doc gaps only, no freqs/norms/positions) finds docs holding
-           at least one member term of EVERY slot;
-        2. **pruned positions decode** — position blocks are decoded
-           only where the block's [first_doc, last_doc] range contains a
-           candidate (the skip-list hop), then rows are semi-joined to
-           the exact candidate set; a multi-term slot takes the sorted
-           positional union of its members (UnionPostingsEnum);
-        3. **vectorized occurrence count** — all rows' position lists
-           are flattened into one (row, pos)-keyed array; adjacency is
-           one ``np.isin`` per phrase slot (no per-row Python loop).
+        (``search/ExactPhraseMatcher.java:109-153``), as ONE exchange
+        and ONE grouped kernel per doc range.  Blocks that cannot
+        overlap the rarest slot's block ranges are dropped on driver
+        metadata (skip-list hop); every other block is keyed by each
+        doc range ``first_doc div w .. last_doc div w`` it overlaps
+        (``w = ceil(next_doc_id / n_ranges)``; n_ranges is at least the
+        shuffle partitions, more when the term statistics estimate more
+        blocks).  Per range, :func:`_phrase_range_kernel` intersects the
+        slots' doc sets (a multi-member slot takes the union of its
+        members, UnionPostingsEnum), decodes positions only for blocks
+        holding a candidate and counts matches with
+        :func:`phrase_freq`; the (doc_id, norm_val, pf) rows are then
+        scored by column arithmetic.
 
         slop>0 (two distinct slots): freq = sum over in-slop position
         pairs of 1/(1+|displacement|); slop>0 with n>=3 slots (or any
@@ -1524,185 +1693,45 @@ class IndexSearcher:
                 acc += float(bm25.idf(stats[t][0], fdc))
             weight = float(np.float32(np.float32(boost) * np.float32(acc)))
 
-        # 1. candidate docs covering every slot (docs-only decode —
-        # column-pruned so the position/freq/norm binaries never cross
-        # the Python boundary here)
+        # skip-list hop: every match must hold >=1 member of the rarest
+        # slot, so blocks whose doc range cannot overlap that slot's
+        # (driver-side) block ranges are never shipped — sound for the
+        # conjunction-of-slots semantics, and metadata-only
         blocks_all = self._blocks_for(present)
-        # skip-list hop BEFORE the candidate decode: every candidate
-        # must hold >=1 member of the rarest slot, so blocks whose doc
-        # range cannot overlap that slot's (driver-side) block ranges
-        # are never decoded — sound for the conjunction-of-slots
-        # candidate semantics, and metadata-only
         if len(slots) > 1:
             rare_slot = min(slots,
                             key=lambda s: sum(stats[t][0] for t in s))
             rmeta = self._block_meta(list(rare_slot))
             if rmeta is not None and 0 < len(rmeta) <= self.DRIVER_RANGE_CAP:
-                merged = _merge_ranges(
-                    sorted(zip(rmeta["first_doc"].astype(int).tolist(),
-                               rmeta["last_doc"].astype(int).tolist())),
-                    self.MAX_RANGE_INTERVALS)
-                cond = None
-                for lo, hi in merged:
-                    c = (F.col("last_doc") >= lo) & (F.col("first_doc") <= hi)
-                    cond = c if cond is None else cond | c
                 blocks_all = blocks_all.filter(
-                    F.col("term").isin(list(rare_slot)) | cond)
-        docs_only = blocks_all.select(*DOCS_ONLY_COLS).mapInPandas(
-            self._decode_kernel({}, want_scores=False), DECODED_SCHEMA)
-        if all(len(s) == 1 for s in slots):
-            cand = (docs_only.groupBy("doc_id")
-                    .agg(F.count_distinct("term").alias("_nt"))
-                    .filter(F.col("_nt") == len(present))
-                    .select("doc_id"))
-        else:
-            # term -> slot membership is a tiny driver-side relation;
-            # broadcast it and demand distinct-slot coverage == n_slots
-            tmap = self.spark.createDataFrame(
-                [(t, i) for i, s in enumerate(slots) for t in s],
-                "term string, slot int")
-            cand = (docs_only.join(F.broadcast(tmap), "term")
-                    .groupBy("doc_id")
-                    .agg(F.count_distinct("slot").alias("_ns"))
-                    .filter(F.col("_ns") == n_slots)
-                    .select("doc_id"))
-        cand_b = F.broadcast(cand)
-
-        # 2. positions decode only for candidate-bearing blocks — ONE
-        # kernel pass over every slot member's pruned blocks, pivoted
-        # per slot by a single per-doc aggregation (the previous shape
-        # decoded per term and joined one frame per slot: n_slots
-        # exchanges and joins instead of one).  A candidate doc holds
-        # >=1 member of every slot, so the pivoted rows cover exactly
-        # the docs the old inner-join chain kept; a multi-member slot's
-        # sorted distinct union is unchanged, and a single-member
-        # slot's positions list is already sorted and distinct, so the
-        # same aggregation expression reproduces it verbatim.
-        pruned_all = blocks_all.join(
-            cand_b, (F.col("doc_id") >= F.col("first_doc"))
-            & (F.col("doc_id") <= F.col("last_doc")), "left_semi")
-        dec_all = (pruned_all.select("term", *POS_COLS)
-                   .mapInPandas(
-                       self._decode_positions_kernel(with_term=True),
-                       POSITIONS_TERM_SCHEMA)
-                   .join(cand_b, "doc_id", "left_semi"))
-        aggs = [F.first("norm_val").alias("norm_val")]
-        for i, s in enumerate(slots):
-            member_pos = F.when(F.col("term").isin(list(s)),
-                                F.col("positions"))
-            aggs.append(F.sort_array(F.array_distinct(F.flatten(
-                F.collect_list(member_pos)))).alias(f"p{i}"))
-        joined = dec_all.groupBy("doc_id").agg(*aggs)
+                    F.col("term").isin(list(rare_slot)) | _overlap_cond(
+                        sorted(zip(rmeta["first_doc"].astype(int).tolist(),
+                                   rmeta["last_doc"].astype(int).tolist())),
+                        self.MAX_RANGE_INTERVALS))
+        # one exchange: each block is keyed by every doc range its
+        # [first_doc, last_doc] overlaps — at least one range per
+        # shuffle partition, and ~BLOCK_SIZE estimated blocks per range
+        n_ranges = max(
+            int(self.spark.conf.get("spark.sql.shuffle.partitions")),
+            -(-self._estimate_blocks(present) // codecs.BLOCK_SIZE))
+        width = max(1, -(-next_doc_id(self.reader.manifest) // n_ranges))
+        rng = F.explode(F.sequence(F.expr(f"first_doc div {width}"),
+                                   F.expr(f"last_doc div {width}")))
+        with_pf = (blocks_all.select("term", *POS_COLS, rng.alias("_r"))
+                   .groupBy("_r")
+                   .applyInPandas(
+                       _phrase_range_kernel(
+                           slots, slop, tuple(o - offs[0] for o in offs),
+                           width, self.double_mode),
+                       "doc_id long, norm_val long, pf double"))
 
         f_caches, f_avgdls = self._per_term_field_maps({anchor_term: 1.0})
         cache = f_caches.get(anchor_term, self.cache)
         k1, b = float(self.k1), float(self.b)
         avgdl = f_avgdls.get(anchor_term, float(self.avgdl))
         double_mode = self.double_mode
-        slot_keys = slots
-        has_repeats = len(set(slot_keys)) != n_slots
-        # slots with identical member sets need DISTINCT positions
-        # (SloppyPhraseMatcher.java:52-90 repeat handling)
-        repeated = {s for s in slot_keys if slot_keys.count(s) > 1}
-        deltas = tuple(o - offs[0] for o in offs)
-
         from pyspark.sql.functions import pandas_udf
 
-        @pandas_udf("double")
-        def phrase_freq(*plists: pd.Series) -> pd.Series:
-            nrows = len(plists[0])
-            if nrows == 0:
-                return pd.Series(np.zeros(0, dtype=np.float64))
-            M = np.int64(1) << 32  # (row, pos) -> one sortable key
-
-            def keyed(col: pd.Series):
-                lens = np.fromiter((len(x) for x in col), dtype=np.int64,
-                                   count=nrows)
-                total = int(lens.sum())
-                flat = (np.concatenate(
-                    [np.asarray(x, dtype=np.int64) for x in col])
-                    if total else np.zeros(0, dtype=np.int64))
-                rows = np.repeat(np.arange(nrows, dtype=np.int64), lens)
-                return rows * M + flat, rows
-
-            k0, rows0 = keyed(plists[0])
-            if slop == 0:
-                mask = np.ones(len(k0), dtype=bool)
-                for i in range(1, n_slots):
-                    ki, _ = keyed(plists[i])
-                    mask &= np.isin(k0 + deltas[i], ki)
-                pf = np.bincount(rows0[mask],
-                                 minlength=nrows).astype(np.float64)
-            elif n_slots == 2 and not has_repeats:
-                k1s, _ = keyed(plists[1])
-                pf = np.zeros(nrows, dtype=np.float64)
-                for e in range(-slop, slop + 1):
-                    m = np.isin(k0 + deltas[1] + e, k1s)
-                    if m.any():
-                        pf += (np.bincount(rows0[m], minlength=nrows)
-                               / (1.0 + abs(e)))
-            else:
-                # anchor on slot 0 (n>=3, or any n with repeated slots).
-                # Non-repeated slots pick the minimal in-slop
-                # |displacement| independently (one np.isin per offset).
-                # Slots with a REPEATED member set are assigned DISTINCT
-                # positions (Lucene's SloppyPhraseMatcher.java:52-90
-                # forces repeats onto different positions): a
-                # leftmost-feasible greedy in slot order — positions of
-                # the repeat group must be strictly increasing across
-                # its slots, which is WLOG since any crossing assignment
-                # can be uncrossed within the per-slot windows.  The
-                # anchor position is consumed when slot 0 itself
-                # repeats.
-                nk = len(k0)
-                disp_total = np.zeros(nk, dtype=np.float64)
-                valid = np.ones(nk, dtype=bool)
-                offsets_by_abs = sorted(range(-slop, slop + 1), key=abs)
-                keyed_memo: dict[int, np.ndarray] = {}
-                prev: dict[tuple, np.ndarray] = {}
-                if slot_keys[0] in repeated:
-                    prev[slot_keys[0]] = k0
-                for i in range(1, n_slots):
-                    sk = slot_keys[i]
-                    if i not in keyed_memo:
-                        keyed_memo[i] = keyed(plists[i])[0]
-                    ki = keyed_memo[i]
-                    target = k0 + deltas[i]
-                    if sk not in repeated:
-                        best = np.full(nk, np.inf)
-                        for e in offsets_by_abs:
-                            undecided = ~np.isfinite(best)
-                            if not undecided.any():
-                                break
-                            m = undecided & np.isin(target + e, ki)
-                            best[m] = abs(e)
-                        slot_ok = np.isfinite(best)
-                        valid &= slot_ok
-                        disp_total += np.where(slot_ok, best, 0.0)
-                        continue
-                    p = prev.get(sk)
-                    lb = target - slop if p is None \
-                        else np.maximum(target - slop, p + 1)
-                    if len(ki) == 0:
-                        valid[:] = False
-                        break
-                    idx = np.searchsorted(ki, lb, side="left")
-                    idxc = np.minimum(idx, len(ki) - 1)
-                    pos = ki[idxc]
-                    # pos in [lb, target+slop] stays inside the anchor's
-                    # row: keys are row*M + position and slop << M
-                    ok = (idx < len(ki)) & (pos <= target + slop)
-                    valid &= ok
-                    disp_total += np.where(ok, np.abs(pos - target), 0.0)
-                    prev[sk] = np.where(ok, pos, target)
-                w = np.where(valid, 1.0 / (1.0 + disp_total), 0.0)
-                pf = np.bincount(rows0, weights=w, minlength=nrows)
-            return pd.Series(pf)
-
-        with_pf = (joined
-                   .withColumn("pf", phrase_freq(
-                       *[F.col(f"p{i}") for i in range(n_slots)]))
-                   .filter(F.col("pf") > 0.0))
         if double_mode:
             ln = F.col("norm_val").cast("double")
             if self.classic and self.sweet_params is not None:
@@ -1890,14 +1919,7 @@ class IndexSearcher:
             scored = with_pf.select(
                 "doc_id", f32_score("pf", "norm_val").cast("float")
                 .alias("score"))
-        if after is not None:
-            s, d = after
-            scored = scored.filter(
-                (F.col("score") < float(s))
-                | ((F.col("score") == float(s)) & (F.col("doc_id") > int(d))))
-        if k is None:
-            return scored
-        return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+        return _collect(scored, k, after)
 
     # ------------------------------------------------------------------
     def _dismax_search(self, q: DisjunctionMaxQuery, k: int | None,
@@ -1929,14 +1951,7 @@ class IndexSearcher:
             "doc_id",
             ((F.col("mx") + tb * (F.col("sm") - F.col("mx"))) * boost)
             .cast(score_type).alias("score"))
-        if after is not None:
-            s, d = after
-            scored = scored.filter(
-                (F.col("score") < float(s))
-                | ((F.col("score") == float(s)) & (F.col("doc_id") > int(d))))
-        if k is None:
-            return scored
-        return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+        return _collect(scored, k, after)
 
     def term_vector(self, doc_id: int, field: str = "content") -> DataFrame:
         """One document's (term, freq) pairs — ``TermVectors.get(doc)``
@@ -2031,15 +2046,7 @@ class IndexSearcher:
                   .select("doc_id",
                           F.col("_jscore").cast(score_type)
                           .alias("score")))
-        if after is not None:
-            sa, da = after
-            scored = scored.filter(
-                (F.col("score") < float(sa))
-                | ((F.col("score") == float(sa))
-                   & (F.col("doc_id") > int(da))))
-        if k is None:
-            return scored
-        return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+        return _collect(scored, k, after)
 
     def _term_in_set_search(self, q: TermInSetQuery, k: int | None,
                             after: tuple[float, int] | None) -> DataFrame:
@@ -2175,14 +2182,7 @@ class IndexSearcher:
         scored = merged.select(
             "doc_id", syn_score("freq", "norm_val")
             .cast("double" if double_mode else "float").alias("score"))
-        if after is not None:
-            s, d = after
-            scored = scored.filter(
-                (F.col("score") < float(s))
-                | ((F.col("score") == float(s)) & (F.col("doc_id") > int(d))))
-        if k is None:
-            return scored
-        return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+        return _collect(scored, k, after)
 
     def _combined_field_search(self, q: CombinedFieldQuery, k: int | None,
                                after: tuple[float, int] | None) -> DataFrame:
@@ -2332,15 +2332,7 @@ class IndexSearcher:
                 cf_score(F.col("freq"),
                          *[F.col(f"_l{i}") for i in range(n_fields)])
                 .alias("score"))
-        if after is not None:
-            sa, da = after
-            scored = scored.filter(
-                (F.col("score") < float(sa))
-                | ((F.col("score") == float(sa))
-                   & (F.col("doc_id") > int(da))))
-        if k is None:
-            return scored
-        return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+        return _collect(scored, k, after)
 
     def _feature_search(self, q: FeatureQuery, k: int | None,
                         after: tuple[float, int] | None) -> DataFrame:
@@ -2419,15 +2411,7 @@ class IndexSearcher:
             return pd.Series(out)
 
         scored = vals.select("doc_id", fscore("_v").alias("score"))
-        if after is not None:
-            sa, da = after
-            scored = scored.filter(
-                (F.col("score") < float(sa))
-                | ((F.col("score") == float(sa))
-                   & (F.col("doc_id") > int(da))))
-        if k is None:
-            return scored
-        return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+        return _collect(scored, k, after)
 
     def _payload_search(self, q, k: int | None,
                         after: tuple[float, int] | None) -> DataFrame:
@@ -2484,15 +2468,7 @@ class IndexSearcher:
             scored = per_doc.select(
                 "doc_id",
                 (F.lit(boost) * F.col("_p")).cast(dtype).alias("score"))
-        if after is not None:
-            sa, da = after
-            scored = scored.filter(
-                (F.col("score") < float(sa))
-                | ((F.col("score") == float(sa))
-                   & (F.col("doc_id") > int(da))))
-        if k is None:
-            return scored
-        return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+        return _collect(scored, k, after)
 
     # ------------------------------------------------------------------
     def _multi_term_predicate(self, q: MultiTermQuery) -> F.Column:
@@ -3198,9 +3174,7 @@ class IndexSearcher:
             "score", F.expr(q.source)
             .cast("double" if self.double_mode else "float"))
         out = out.select("doc_id", "score")
-        if k is None:
-            return out
-        return out.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+        return _collect(out, k)
 
     def search_sorted(self, query: Query | str,
                       by: list[tuple[str, str]],

@@ -375,3 +375,54 @@ def test_add_indexes_after_reclaiming_compact(spark, tmp_root, corpus):
     assert s.reader.stats == s_ref.reader.stats
     for q in QUERIES:
         assert _hits(s, q) == _hits(s_ref, q), q
+
+
+def test_merge_without_hard_links(spark, tmp_root, corpus, monkeypatch):
+    """A no-delete merge on a filesystem without hard links: every
+    os.link fails, the merge copies instead, and the merged index
+    passes CheckIndex with unchanged results.  Linked doc files carry
+    their source segment, so equal basenames of two segments cannot
+    collide."""
+    from lucene_1_spark.index.check import check_index
+    d = os.path.join(tmp_root, "idx_mrg_nolink")
+    w = _build_segmented(spark, d, corpus, n_appends=2)
+    before = {q: _hits(IndexSearcher(IndexReader(spark, d)), q)
+              for q in QUERIES}
+
+    def no_link(src, dst, *a, **kw):
+        raise OSError("hard links not supported")
+
+    monkeypatch.setattr(os, "link", no_link)
+    out = w.merge(segments=["seg1", "seg2"])
+    assert out is not None and out["segment"] == "segM1"
+    r = IndexReader(spark, d)
+    report = check_index(r)
+    assert all(ok for ok, _ in report.values()), report
+    s = IndexSearcher(r)
+    for q in QUERIES:
+        assert _hits(s, q) == before[q], q
+    docs = _file_census(os.path.join(d, r.manifest["docs_path"]))
+    linked = sorted(os.path.basename(p) for p in docs
+                    if os.path.basename(p).startswith("segM1-"))
+    assert any(p.startswith("segM1-seg1-") for p in linked), linked
+    assert any(p.startswith("segM1-seg2-") for p in linked), linked
+
+
+def test_merge_of_interleaved_segments_keeps_blocks_sorted(
+        spark, tmp_root, corpus):
+    """Merging non-adjacent segments yields a segment whose doc ids
+    span the ones between; a later merge with those must still write
+    ascending doc ids per block with true [first_doc, last_doc]."""
+    from lucene_1_spark.index.check import check_index
+    d = os.path.join(tmp_root, "idx_mrg_interleave")
+    w = _build_segmented(spark, d, corpus, n_appends=3)
+    before = {q: _hits(IndexSearcher(IndexReader(spark, d)), q)
+              for q in QUERIES}
+    assert w.merge(segments=["seg1", "seg3"])["segment"] == "segM1"
+    assert w.merge(segments=["seg2", "segM1"])["segment"] == "segM2"
+    r = IndexReader(spark, d)
+    report = check_index(r)
+    assert all(ok for ok, _ in report.values()), report
+    s = IndexSearcher(r)
+    for q in QUERIES:
+        assert _hits(s, q) == before[q], q

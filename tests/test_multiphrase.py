@@ -202,3 +202,26 @@ def test_complex_phrase_parser_end_to_end(spark, tmp_root):
     q6 = parse_complex_phrase('+"ja* smith" -stalls',
                               analyzer="whitespace")
     assert paths(q6) == {"d0", "d3"}
+
+
+def test_multiphrase_straddling_ranges_with_gap(spark, tmp_root):
+    """Multi-member slots and a position gap on an index far larger
+    than BLOCK_SIZE x shuffle partitions, so posting blocks straddle
+    the doc ranges the phrase kernel groups on."""
+    pdf = corpus_mod.generate(3000, seed=7)
+    d = os.path.join(tmp_root, "idx_multiphrase_big")
+    src = spark.createDataFrame(pdf).repartition(8, "repo")
+    IndexBuilder(spark, d, IndexConfig(n_buckets=8, n_doc_partitions=8,
+                                       positions=True)).build(src)
+    se = IndexSearcher(IndexReader(spark, d))
+    oidx = oracle_mod.build_oracle_index(pdf)
+    for slots, offsets, slop in [
+        ((("tok0", "tok3"), ("tok1", "tok2")), (0, 2), 0),
+        ((("tok1",), ("tok0", "tok2"), ("tok3", "tok4")), (0, 1, 3), 1),
+    ]:
+        exp = oracle_mod.search_oracle_multiphrase(
+            oidx, slots, k=10, slop=slop, offsets=offsets)
+        assert exp, slots
+        got = _got(se, MultiPhraseQuery(slots, slop=slop,
+                                        positions=offsets))
+        assert got == _want(exp), (slots, offsets, slop)

@@ -114,6 +114,21 @@ def test_pack_sequences_per_shard(spark):
     assert got[3]["seq_id"] == 1          # starts at tok 4
 
 
+def test_pack_sequences_string_ids(spark):
+    """A string id column has no numeric id groups: every row is still
+    packed, in id (string) order, by the single global window."""
+    texts = {"d10": "a b c", "d02": "d e", "d1": "f g h i", "x": "j"}
+    df = spark.createDataFrame(list(texts.items()),
+                               "doc_id string, text string")
+    got = {r["doc_id"]: r for r in pack_sequences(df, capacity=4).collect()}
+    assert set(got) == set(texts)
+    # string order: d02, d1, d10, x -> starts 0, 2, 6, 9
+    assert {k: got[k]["tok_start"] for k in texts} == \
+        {"d02": 0, "d1": 2, "d10": 6, "x": 9}
+    assert {k: got[k]["seq_id"] for k in texts} == \
+        {"d02": 0, "d1": 0, "d10": 1, "x": 2}
+
+
 # ---------------------------------------------------------------- semdedup
 
 def test_semdedup_keep_first_rule(spark):

@@ -58,18 +58,14 @@ def test_decode_inputs_column_pruned(searcher):
 
 
 def test_phrase_one_positions_kernel(searcher):
-    """The phrase path runs ONE positions-decoding kernel (the
-    per-slot decode+join chain is gone); the docs-only candidate
-    kernel appears at most twice textually (the broadcast candidate
-    subtree is referenced from two join sites and reused at runtime)."""
-    import re
-
+    """The phrase path runs ONE positions-decoding kernel: a single
+    grouped kernel per doc range, with no docs-only candidate kernel
+    and no candidate broadcast or semi-join."""
     from lucene_1_spark.search.query import PhraseQuery
     plan = _plan(searcher.search_df(PhraseQuery(("tok0", "tok1")), k=10))
-    kernels = re.findall(r"MapInPandas decode\([^)]*\)", plan)
-    pos_kernels = [k for k in kernels if "positions#" in k]
-    assert len(pos_kernels) == 1
-    assert len(kernels) - len(pos_kernels) <= 2
+    assert plan.count("FlatMapGroupsInPandas") == 1
+    assert "MapInPandas" not in plan
+    assert "Broadcast" not in plan and "LeftSemi" not in plan
 
 
 def test_empty_df_memoized(spark):
